@@ -2508,7 +2508,8 @@ class QueryCompiler:
         (the Pregel superstep expressed relationally; same shape as
         ops/algos.bfs_distances but per-source). Each level joins the
         frontier to the edge list, drops already-reached (root, node)
-        pairs, and localCheckpoints to truncate lineage.
+        pairs, and checkpoints to truncate lineage (ops/algos'
+        superstep runner, always in local mode).
 
         shortestPath/allShortestPaths both compile here: we return the
         per-pair minimum distance, not materialized path objects, so
@@ -2531,40 +2532,33 @@ class QueryCompiler:
         base = self._adjacency_pairs(rel)
         base = (base if base is not None
                 else self._oriented_pairs(rel)).persist()
-        # each level's frontier size rides its localCheckpoint job as an
-        # observed metric (r14, guide §2.4) — the per-level isEmpty
-        # probe job is gone
-        from pyspark.sql import Observation
+        # each level's frontier size rides its checkpoint job as an
+        # observed metric (r14, guide §2.4) — no per-level probe job
+        from ..ops.algos import _Supersteps
 
-        obs = Observation()
-        frontier = base.select(
+        ss = _Supersteps(base, "local")
+        frontier, n_frontier = ss.count(base.select(
             F.col("src").alias("root"), F.col("dst").alias("node"),
             F.lit(1).alias("hops"),
-        ).dropDuplicates(["root", "node"]) \
-            .observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-        n_frontier = obs.get["n"]
+        ).dropDuplicates(["root", "node"]))
         reached = frontier
-        for k in range(2, rel.max_hops + 1):
+        for k in ss.rounds(rel.max_hops - 1):
             if n_frontier == 0:
                 break
-            obs = Observation()
-            frontier = (
+            frontier, n_frontier = ss.count(
                 frontier.join(
                     base, frontier["node"] == base["src"], "inner"
                 )
                 .select(
                     F.col("root"), base["dst"].alias("node"),
-                    F.lit(k).alias("hops"),
+                    F.lit(k + 1).alias("hops"),
                 )
                 .dropDuplicates(["root", "node"])
                 .join(reached.select("root", "node"),
                       ["root", "node"], "left_anti")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint()
             )
-            n_frontier = obs.get["n"]
             reached = reached.unionByName(frontier)
-        # Every level is eagerly localCheckpoint-ed, so nothing still
+        # Every level is eagerly checkpointed, so nothing still
         # reads `base` after the loop — release its cached blocks now
         # (same cache discipline as the batch dedup operators).
         base.unpersist()

@@ -8,27 +8,43 @@ loop directly in the DataFrame API so Catalyst/Tungsten run each
 superstep, and scale the way GraphX does (hash-partitioned by vertex id,
 one shuffle per superstep).
 
-Scale notes common to all loops:
-- Each iteration's result is checkpointed (configurable off):
-  iterative lineage otherwise grows unboundedly and re-executes from
-  scratch at every action — the classic iterative-Spark failure mode.
-- ``checkpoint`` mode: ``True``/``'local'`` (default) truncates via
-  ``localCheckpoint`` — executor block storage, zero-setup, right for
-  exploration, but blocks are LOST with their executor: on a real
-  cluster one lost executor mid-run kills a 20-round job (Spark
-  cannot recompute a localCheckpoint). ``'reliable'`` (with
+Every superstep loop — here, in ops/walks and in the compiler's
+shortestPath BFS — runs through one runner, ``_Supersteps``. Its
+contract:
+
+- **Barriers.** ``ckpt(df)`` truncates lineage once per superstep
+  (iterative lineage otherwise grows unboundedly and re-executes from
+  scratch at every action). ``count(df)`` / ``ckpt_obs(df, *aggs)``
+  collect the round's size or convergence probe as observed metrics
+  riding that same checkpoint job: one job per barrier, no separate
+  probe action. Fixed-iteration loops skip the probe.
+- **Checkpoint mode.** ``checkpoint=True``/``'local'`` (default)
+  truncates via ``localCheckpoint``: executor block storage,
+  zero-setup, right for exploration, but the blocks are LOST with
+  their executor, and Spark cannot recompute them. ``'local_disk'``
+  keeps them on disk (bounded heap). ``'reliable'`` (with
   ``checkpoint_dir=`` naming a DFS path, or a SparkContext checkpoint
-  dir already set) uses ``DataFrame.checkpoint`` — each round's state
-  is written to the reliable store, so executor loss costs a re-read,
-  not a rerun. At 100 TB the per-round write (vertex-state-sized, not
-  edge-sized) is the insurance premium; pass ``checkpoint_dir=`` on
-  any multi-hour run. Passing ``checkpoint_dir`` alone upgrades the
-  default to reliable mode. ``False`` disables truncation (tiny
-  graphs/few rounds only).
-- Convergence checks ride the per-round checkpoint job as observed
-  metrics (``_ckpt_obs``) — one job per superstep barrier, no separate
-  probe action; fixed-iteration loops skip them entirely.
-- Edge DataFrames are reused across supersteps — persist() them before
+  dir already set) writes each round's vertex-sized state to the
+  reliable store, so executor loss costs a re-read, not a rerun;
+  naming ``checkpoint_dir`` alone upgrades the default to it.
+  ``False`` disables truncation (tiny graphs, few rounds). Results
+  are mode-independent.
+- **Rounds.** ``rounds(limit, self_join=...)`` numbers a loop's
+  supersteps from 1. A loop that joins its own previous state
+  declares ``self_join=True``; on every ``_RESET_STATS_EVERY``-th
+  round its barrier strips the checkpoint's inherited size estimate
+  (``_reset_stats``). No other loop pays for the reset. The loop body
+  decides what the round limit means: MIS and SCC raise,
+  betweenness warns, the others return what they have.
+  ``until_stable`` is the changed-flag fixpoint (the step emits a
+  boolean ``chg`` column whose count rides the barrier; stop at 0).
+- **Partition sizing.** Inside ``sized(rows)`` the session's
+  ``spark.sql.shuffle.partitions`` shrinks to
+  ``ceil(rows / _PART_TARGET_ROWS)`` (never above the session value),
+  and ``resize`` re-derives it from the rows a barrier observed, or
+  from the join rows a ``touched`` frame counted. Only the outermost
+  scope per session is live; the setting is restored on exit.
+- Edge DataFrames are reused across supersteps: persist() them before
   calling if they are derived (not a raw parquet scan).
 
 All file:line references are to /root/reference for the query-surface
@@ -38,10 +54,18 @@ graph algorithms at all — SURVEY.md §2.8).
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import itertools
+import math
 import threading
+import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+# failed _reset_stats rebuilds in this process; next() on it is atomic
+_RESET_FAILURES = itertools.count()
 
 
 def _reset_stats(df: DataFrame) -> DataFrame:
@@ -57,20 +81,29 @@ def _reset_stats(df: DataFrame) -> DataFrame:
     would overflow supported range" (reproduced on a 24-cycle SCC
     sweep; only SELF-join loops double — ordinary join chains grow
     tens of bits per round and are harmless). The reset is requested
-    EXPLICITLY by those loops (``_ckpt(..., reset_stats=True)``)
-    rather than probed from the stored estimate: reading
-    ``stats().sizeInBytes()`` through py4j stringifies the BigInteger
-    (py4j ReturnObject -> BigInteger.toString, quadratic), which was
-    caught burning minutes per checkpoint once estimates grew large.
+    EXPLICITLY for loops that declare themselves self-joining
+    (``_Supersteps.rounds(self_join=True)``) rather than probed from
+    the stored estimate: reading ``stats().sizeInBytes()`` through
+    py4j stringifies the BigInteger (py4j ReturnObject ->
+    BigInteger.toString, quadratic), which was caught burning minutes
+    per checkpoint once estimates grew large.
     Purely a metadata reset: same rows, same truncated lineage (the
     new plan's RDD is derived from the checkpointed blocks); the new
-    frame's estimate falls back to spark.sql.defaultSizeInBytes."""
+    frame's estimate falls back to spark.sql.defaultSizeInBytes.
+
+    If the rebuild fails, the frame comes back unchanged and one
+    RuntimeWarning per process says the guard is off."""
     try:
         spark = df.sparkSession
         jdf = spark._jsparkSession.createDataFrame(
             df._jdf.javaRDD(), df._jdf.schema())
         return type(df)(jdf, spark)
-    except Exception:
+    except Exception as exc:
+        if next(_RESET_FAILURES) == 0:
+            warnings.warn(
+                f"superstep stats reset failed ({exc!r}); self-joining "
+                "loops keep compounding size estimates",
+                RuntimeWarning, stacklevel=2)
         return df
 
 
@@ -125,8 +158,6 @@ def _ckpt_obs(df: DataFrame, mode, *aggs, reset_stats: bool = False):
     same eagerness the old per-round ``isEmpty`` had in that mode (and
     no ``first()``/``collect()``, which the loop contracts pin as
     driver-action-free)."""
-    from pyspark.sql import Observation
-
     obs = Observation()
     if not mode:
         df.observe(obs, *aggs).count()
@@ -142,101 +173,134 @@ def _ckpt_obs(df: DataFrame, mode, *aggs, reset_stats: bool = False):
 _PART_TARGET_ROWS = 250_000
 
 # Self-joining superstep loops strip the checkpoint's inherited size
-# estimate every N-th round (_ckpt(..., reset_stats=True)) — their
-# estimates double in bit length per round (see _reset_stats), so a
-# periodic reset caps the planner's BigInteger work at
-# initial_bits * 2^N while paying the row-conversion cost on at most
-# one round in N. Linear-growth loops never need it but fire it on
-# the same cadence for uniformity — the cost is one narrow
-# vertex-sized conversion.
+# estimate every N-th round — their estimates double in bit length per
+# round (see _reset_stats), so a periodic reset caps the planner's
+# BigInteger work at initial_bits * 2^N while paying the row
+# conversion on at most one round in N.
 _RESET_STATS_EVERY = 6
 
-# Sessions with a live _adaptive_parts loop (keyed by the underlying
-# JVM session object id) + the lock that serializes enter/exit — see
-# _adaptive_parts: only the outermost loop per session may own the
-# shuffle.partitions override.
+# Sessions with a live sized() scope (keyed by the underlying JVM
+# session object id) + the lock that serializes enter/exit: only the
+# outermost loop per session may own the shuffle.partitions override.
 _AP_LOCK = threading.Lock()
 _AP_ACTIVE: set[int] = set()
 
+_PARTS = "spark.sql.shuffle.partitions"
 
 
-class _adaptive_parts:
-    """Scale the loop's ``spark.sql.shuffle.partitions`` to its data:
-    ``min(session setting, ceil(rows / _PART_TARGET_ROWS))`` for the
-    duration of a superstep loop, restored on exit.
+class _Supersteps:
+    """One iterative loop's barriers, round numbering and partition
+    sizing (the contract is in the module docstring). Built once per
+    call from the input frame and the caller's ``checkpoint`` /
+    ``checkpoint_dir`` options."""
 
-    Why (guide §2.2): every superstep materializes through a
-    checkpoint, whose RDD-path execution AQE coalescing does NOT
-    reach — so per-round reduce-task count rides the static session
-    setting no matter how small the live state is, and measured
-    ~0.85 s/barrier at 32 partitions vs ~0.37 s at 8 on a
-    fixture-sized coloring superstep. The count only ever SHRINKS
-    below the session value (at real scale rows/target exceeds any
-    configured setting, making this a no-op), and it derives from
-    observed loop-state sizes, not from the local core count.
-    ``update(rows)`` re-derives mid-loop as the live state shrinks or
-    a better size signal (e.g. touched-edge counts) arrives. Results
-    are partition-count-independent — every loop here is built from
-    deterministic joins/aggregates (pinned by the repartition-
-    invariance tests). Note the setting is session-global while the
-    loop runs, like ``setJobDescription``.
+    def __init__(self, df: DataFrame, checkpoint=True, checkpoint_dir=None):
+        self.spark = df.sparkSession
+        self.mode = _prepare_ckpt(df, checkpoint, checkpoint_dir)
+        self._reset = False  # strip stats at the round's barrier
+        self._orig = None    # session partitions while this loop owns them
+        self._rows = None
+        self._touched: list[Observation] = []
 
-    Only the OUTERMOST instance per session is live (r15, ADVICE): a
-    nested or concurrent loop on the same SparkSession becomes a
-    no-op instead of capturing the outer loop's shrunken value as its
-    'orig' — two overlapping loops could otherwise race and leave the
-    session pinned at 1 partition after both exit. Guarded by a
-    module lock; the holder key is the session object."""
+    def ckpt(self, df: DataFrame) -> DataFrame:
+        reset, self._reset = self._reset, False
+        return _ckpt(df, self.mode, reset_stats=reset)
 
-    def __init__(self, spark, rows):
-        self._conf = spark.conf
-        self._key = id(spark._jsparkSession) \
-            if hasattr(spark, "_jsparkSession") else id(spark)
+    def ckpt_obs(self, df: DataFrame, *aggs):
+        """``(checkpointed df, metrics)`` with ``aggs`` (aliased
+        aggregate Columns) collected on the checkpoint job."""
+        reset, self._reset = self._reset, False
+        return _ckpt_obs(df, self.mode, *aggs, reset_stats=reset)
+
+    def count(self, df: DataFrame):
+        """``(checkpointed df, row count)`` in one job."""
+        out, m = self.ckpt_obs(df, F.count(F.lit(1)).alias("n"))
+        return out, m["n"]
+
+    def rounds(self, limit: int | None = None, self_join: bool = False):
+        """Round numbers 1..limit (unbounded when ``limit`` is None).
+        A self-joining loop takes one barrier per round; on every
+        ``_RESET_STATS_EVERY``-th round that barrier resets stats."""
+        for r in itertools.count(1) if limit is None \
+                else range(1, limit + 1):
+            self._reset = self_join and r % _RESET_STATS_EVERY == 0
+            yield r
+
+    def until_stable(self, state: DataFrame, step, limit=None,
+                     self_join: bool = False) -> DataFrame:
+        """Iterate ``state = step(state, round)`` until no row's
+        boolean ``chg`` column is set (or ``limit`` rounds ran); the
+        changed count rides each round's barrier."""
+        for r in self.rounds(limit, self_join):
+            state, m = self.ckpt_obs(
+                step(state, r),
+                F.count(F.when(F.col("chg"), True)).alias("chg"))
+            state = state.drop("chg")
+            if m["chg"] == 0:
+                break
+        return state
+
+    def touched(self, df: DataFrame) -> DataFrame:
+        """``df`` with its row count observed on whichever barrier runs
+        it; the count feeds the next ``resize`` (a supernode frontier's
+        join output can outgrow every state frame)."""
+        obs = Observation()
+        self._touched.append(obs)
+        return df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+    @contextlib.contextmanager
+    def sized(self, rows: int | None = None):
+        """Scale ``spark.sql.shuffle.partitions`` to the loop's data
+        while the block runs: ``min(session setting, ceil(rows /
+        _PART_TARGET_ROWS))``, restored on exit. ``rows=None`` keeps
+        the session setting until the first ``resize``.
+
+        Why (guide §2.2): every superstep materializes through a
+        checkpoint, whose RDD-path execution AQE coalescing does NOT
+        reach — so per-round reduce-task count rides the static
+        session setting no matter how small the live state is
+        (measured ~0.85 s/barrier at 32 partitions vs ~0.37 s at 8 on
+        a fixture-sized coloring superstep). The count only ever
+        SHRINKS below the session value and derives from observed
+        loop-state sizes, not from the local core count. Results are
+        partition-count-independent (pinned by the repartition-
+        invariance tests). The setting is session-global while the
+        loop runs, like ``setJobDescription``, so only the OUTERMOST
+        scope per session is live: a nested or
+        concurrent loop on the same session becomes a no-op instead of
+        capturing the outer loop's shrunken value as its original."""
+        key = id(getattr(self.spark, "_jsparkSession", self.spark))
         with _AP_LOCK:
-            if self._key in _AP_ACTIVE:
-                # another loop already owns this session's setting
-                self._orig = None
-                self._key = None
-            else:
-                _AP_ACTIVE.add(self._key)
-                try:
-                    self._orig = int(
-                        self._conf.get("spark.sql.shuffle.partitions"))
-                except (TypeError, ValueError):
-                    self._orig = None
-        self._rows = max(int(rows), 1)
+            owner = key not in _AP_ACTIVE
+            _AP_ACTIVE.add(key)
+        try:
+            if owner:
+                with contextlib.suppress(TypeError, ValueError):
+                    self._orig = int(self.spark.conf.get(_PARTS))
+                if rows is not None:
+                    self.resize(rows)
+            yield self
+        finally:
+            if owner:
+                if self._orig is not None:
+                    self.spark.conf.set(_PARTS, str(self._orig))
+                self._orig = self._rows = None
+                with _AP_LOCK:
+                    _AP_ACTIVE.discard(key)
 
     def _want(self) -> int:
-        import math
-
         return min(self._orig,
                    max(1, math.ceil(self._rows / _PART_TARGET_ROWS)))
 
-    def __enter__(self):
-        if self._orig is not None and self._want() < self._orig:
-            self._conf.set("spark.sql.shuffle.partitions",
-                           str(self._want()))
-        return self
-
-    def update(self, rows) -> None:
-        """Feed a fresher size signal (max of whatever is known)."""
-        if self._orig is None:
-            return
-        rows = max(int(rows), 1)
-        if rows == self._rows:
+    def resize(self, *rows: int) -> None:
+        """Feed a fresher size signal: the max of ``rows`` and the
+        rows ``touched`` frames counted since the last call."""
+        rows = max(*rows, *(o.get["n"] for o in self._touched), 1)
+        self._touched = []
+        if self._orig is None or rows == self._rows:
             return
         self._rows = rows
-        self._conf.set("spark.sql.shuffle.partitions",
-                       str(self._want()))
-
-    def __exit__(self, *exc):
-        if self._orig is not None:
-            self._conf.set("spark.sql.shuffle.partitions",
-                           str(self._orig))
-        if self._key is not None:
-            with _AP_LOCK:
-                _AP_ACTIVE.discard(self._key)
-        return False
+        self.spark.conf.set(_PARTS, str(self._want()))
 
 
 def _prepare_ckpt(df: DataFrame, checkpoint, checkpoint_dir):
@@ -261,6 +325,19 @@ def _prepare_ckpt(df: DataFrame, checkpoint, checkpoint_dir):
         if env:
             checkpoint = env
     return checkpoint
+
+
+def _union_all(parts: list[DataFrame], empty: DataFrame | None = None):
+    """Left-deep unionByName of ``parts``; ``empty`` when there are none."""
+    return functools.reduce(lambda a, b: a.unionByName(b), parts) \
+        if parts else empty
+
+
+def _vertex_ids(edges: DataFrame, src: str = "src",
+                dst: str = "dst") -> DataFrame:
+    """Distinct ``(id)`` over both endpoint columns."""
+    return edges.select(F.col(src).alias("id")).union(
+        edges.select(F.col(dst).alias("id"))).distinct()
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -300,11 +377,9 @@ def pagerank(
     preference column is a left-semi-derived 0/1 flag joined once onto
     the vertex set, so no per-iteration extra work.
     """
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    vertices = e.select(F.col("src").alias("id")).union(
-        e.select(F.col("dst").alias("id"))
-    ).distinct()
+    vertices = _vertex_ids(e)
     if sources is not None:
         # preference weight: n/|S| on sources, 0 elsewhere (sums to n,
         # matching the uniform case where every vertex carries 1)
@@ -318,9 +393,7 @@ def pagerank(
         )
     else:
         vertices = vertices.withColumn("_pref", F.lit(1.0))
-    vertices, _m = _ckpt_obs(vertices, checkpoint,
-                             F.count(F.lit(1)).alias("n"))
-    n = _m["n"]
+    vertices, n = ss.count(vertices)
     # per-vertex teleport share: uniform -> 1/n * n = 1; personalized
     # -> n/|S| on sources (both normalized so ranks sum to n)
     pref_scale = 1.0 if sources is None else float(n) / n_src
@@ -336,18 +409,15 @@ def pagerank(
     # collect_list prep aggregate isn't paid back when ranks is tiny
     # enough to broadcast into the contrib join; see OPTIMIZATION_r14.)
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    e2, _m = _ckpt_obs(e.join(out_deg, "src"), checkpoint,
-                       F.count(F.lit(1)).alias("n"))
-    n_edges = _m["n"]
-    dang_v = _ckpt(
+    e2, n_edges = ss.count(e.join(out_deg, "src"))
+    dang_v = ss.ckpt(
         vertices.join(out_deg.withColumnRenamed("src", "id"), "id",
-                      "left_anti").select("id"),
-        checkpoint)
+                      "left_anti").select("id"))
     ranks = vertices.select("id", "_pref", F.lit(1.0).alias("rank"))
     # every iteration shuffles at most max(|E|, |V|) rows (contrib
-    # aggregate / vertex update); scale the reduce-partition count
-    with _adaptive_parts(edges.sparkSession, max(n, n_edges)):
-        for _ in range(iterations):
+    # aggregate / vertex update)
+    with ss.sized(max(n, n_edges)):
+        for _ in ss.rounds(iterations):
             contribs = (
                 ranks.join(e2, ranks["id"] == e2["src"], "inner")
                 .select(
@@ -377,7 +447,7 @@ def pagerank(
                      ).alias("rank"),
                 )
             )
-            ranks = _ckpt(ranks, checkpoint)
+            ranks = ss.ckpt(ranks)
     return ranks.select("id", "rank")
 
 
@@ -401,11 +471,9 @@ def connected_components(
     of diameter, the right choice for 100 TB graphs whose diameter is
     unknown or large (a path-shaped graph makes HashMin run
     diameter-many shuffles)."""
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
     if algorithm == "two-phase":
-        labels, _ = _cc_two_phase(
-            edges, src, dst, max_iterations, checkpoint
-        )
+        labels, _ = _cc_two_phase(edges, src, dst, max_iterations, ss.mode)
         return labels
     if algorithm != "hashmin":
         raise ValueError(
@@ -415,53 +483,38 @@ def connected_components(
     # One prep shuffle, not two: repartition("a") then dropDuplicates —
     # hashpartitioning(a) already clusters (a, b), so the dedup
     # aggregate runs in place with no second exchange.
-    und, _m = _ckpt_obs(
+    und, n_und = ss.count(
         _symmetrize(edges, src, dst)
-        .repartition(F.col("a")).dropDuplicates(["a", "b"]), checkpoint,
-        F.count(F.lit(1)).alias("n"),
-    )
-    labels = und.select(F.col("a").alias("id")).distinct().select(
+        .repartition(F.col("a")).dropDuplicates(["a", "b"]))
+    labels = ss.ckpt(und.select(F.col("a").alias("id")).distinct().select(
         "id", F.col("id").alias("component")
-    )
-    labels = _ckpt(labels, checkpoint)
-    # every superstep shuffles at most |E_sym| rows (the vote
-    # aggregate); scale the reduce-partition count to that
-    with _adaptive_parts(edges.sparkSession, _m["n"]):
-        for _round in range(max_iterations):
-            # shuffle_hash on the label side: build the per-task hash
-            # map on labels (vertex-sized) instead of sorting the edge
-            # side; scale-safe — no broadcast assumption.
-            neighbor_min = (
-                labels.hint("shuffle_hash")
-                .join(und, labels["id"] == und["a"], "inner")
-                .select(F.col("b").alias("id"), "component")
-                .groupBy("id")
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            # changed-flag rides the row (nbr_min < component iff the
-            # label moves), and the changed COUNT rides the checkpoint
-            # job itself — no per-round compare-join + probe job
-            # (guide §2.4)
-            new_labels = (
-                labels.join(neighbor_min, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("nbr_min"), F.col("component")),
-                    ).alias("component"),
-                    (F.col("nbr_min") < F.col("component")).alias("chg"),
-                )
-            )
-            new_labels, m = _ckpt_obs(
-                new_labels, checkpoint,
-                F.count(F.when(F.col("chg"), True)).alias("chg"),
-                reset_stats=(_round % _RESET_STATS_EVERY
-                             == _RESET_STATS_EVERY - 1))
-            labels = new_labels.drop("chg")
-            if m["chg"] == 0:
-                break
-    return labels
+    ))
+
+    def step(labels, _round):
+        # shuffle_hash on the label side: build the per-task hash map
+        # on labels (vertex-sized) instead of sorting the edge side;
+        # scale-safe — no broadcast assumption.
+        neighbor_min = (
+            labels.hint("shuffle_hash")
+            .join(und, labels["id"] == und["a"], "inner")
+            .select(F.col("b").alias("id"), "component")
+            .groupBy("id")
+            .agg(F.min("component").alias("nbr_min"))
+        )
+        # changed-flag rides the row (nbr_min < component iff the
+        # label moves) — no per-round compare-join (guide §2.4)
+        return labels.join(neighbor_min, "id", "left").select(
+            "id",
+            F.least(
+                F.col("component"),
+                F.coalesce(F.col("nbr_min"), F.col("component")),
+            ).alias("component"),
+            (F.col("nbr_min") < F.col("component")).alias("chg"),
+        )
+
+    # every superstep shuffles at most |E_sym| rows (the vote aggregate)
+    with ss.sized(n_und):
+        return ss.until_stable(labels, step, max_iterations, self_join=True)
 
 
 def _cc_two_phase(
@@ -492,27 +545,25 @@ def _cc_two_phase(
     per round. No step keys anything by component, so a giant
     component never concentrates on one task (HashMin shares this
     property; the win here is round COUNT, not per-round cost)."""
+    ss = _Supersteps(edges, checkpoint)
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    vertices = (
+    vertices = ss.ckpt(
         e.select("u").union(e.select(F.col("v").alias("u"))).distinct()
     )
-    vertices = _ckpt(vertices, checkpoint)
     # child > parent orientation; self-loops drop (they never affect
     # membership; singleton vertices rejoin via the anti-join below)
-    pairs, _m = _ckpt_obs(
+    pairs, n_pairs = ss.count(
         e.filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
-        .distinct(), checkpoint, F.count(F.lit(1)).alias("n"),
-    )
+        .distinct())
     prev_sig = None
     rounds = 0
     # every round shuffles at most 2x the (shrinking) pair count (the
-    # symmetric large-star aggregate); scale reduce partitions to it
-    with _adaptive_parts(edges.sparkSession, 2 * _m["n"]) as ap:
-        for _ in range(max_iterations):
-            rounds += 1
+    # symmetric large-star aggregate)
+    with ss.sized(2 * n_pairs):
+        for rounds in ss.rounds(max_iterations, self_join=True):
             # -- large-star over the symmetric neighborhood
             sym = pairs.union(
                 pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -540,17 +591,16 @@ def _cc_two_phase(
             )
             # the 1-row signature rides the checkpoint job (guide §2.4:
             # one job per round, not two)
-            pairs, m = _ckpt_obs(
-                small, checkpoint,
+            pairs, m = ss.ckpt_obs(
+                small,
                 F.count(F.lit(1)).alias("n"),
                 F.bit_xor(F.xxhash64("u", "v")).alias("x"),
-                reset_stats=(rounds % _RESET_STATS_EVERY == 0),
             )
             sig = (m["n"], m["x"])
             if sig == prev_sig:
                 break
             prev_sig = sig
-            ap.update(2 * m["n"])
+            ss.resize(2 * m["n"])
     labels = pairs.select(
         F.col("u").alias("id"), F.col("v").alias("component")
     )
@@ -572,42 +622,32 @@ def bfs_distances(
     Returns (id, distance). Frontier-based: each superstep expands only
     newly-reached vertices (the frontier), so total work is O(edges
     touched), not O(V × hops)."""
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    visited = sources.select(
+    visited = ss.ckpt(sources.select(
         F.col(id_col).alias("id"), F.lit(0).alias("distance")
-    ).distinct()
-    visited = _ckpt(visited, checkpoint)
+    ).distinct())
     frontier = visited
     # hop 1 runs at the session setting (no size signal yet); each hop
-    # then observes its own touched-edge rows (the expansion join
-    # output) and visited rows, and scales reduce partitions to the
-    # larger — a supernode frontier can never under-partition
-    from pyspark.sql import Observation
-
-    with _adaptive_parts(edges.sparkSession, 10 ** 12) as ap:
-        for hop in range(1, max_hops + 1):
-            touched = Observation()
+    # then sizes partitions by the larger of its touched-edge rows (the
+    # expansion join output) and visited rows — a supernode frontier
+    # can never under-partition
+    with ss.sized():
+        for hop in ss.rounds(max_hops):
             neighbors = (
-                frontier.join(e, frontier["id"] == e["src"], "inner")
-                .observe(touched, F.count(F.lit(1)).alias("n"))
+                ss.touched(frontier.join(e, frontier["id"] == e["src"],
+                                         "inner"))
                 .select(F.col("dst").alias("id"))
                 .distinct()
             )
-            new_frontier = (
+            new_frontier, n_new = ss.count(
                 neighbors.join(visited, "id", "left_anti")
-                .select("id", F.lit(hop).alias("distance"))
-            )
-            # frontier size rides the checkpoint job — no separate probe
-            new_frontier, m = _ckpt_obs(
-                new_frontier, checkpoint, F.count(F.lit(1)).alias("n"))
-            if m["n"] == 0:
+                .select("id", F.lit(hop).alias("distance")))
+            if n_new == 0:
                 break
-            visited, mv = _ckpt_obs(
-                visited.unionByName(new_frontier), checkpoint,
-                F.count(F.lit(1)).alias("n"))
+            visited, n_visited = ss.count(visited.unionByName(new_frontier))
             frontier = new_frontier
-            ap.update(max(mv["n"], touched.get["n"]))
+            ss.resize(n_visited)
     return visited
 
 
@@ -628,7 +668,7 @@ def sssp_weighted(
     at O(touched edges) per round instead of O(E). Weights must be
     non-negative (no negative-cycle detection). Integer weights sum
     exactly; the whole loop is shuffled on vertex ids and
-    localCheckpoint-truncated per round like the other loops here.
+    checkpoint-truncated per round like the other loops here.
 
     r14 optimization (guide §2.4): each round is ONE materialization —
     the relaxation candidates full-outer-merge into the distance table
@@ -637,29 +677,24 @@ def sssp_weighted(
     instead of the r13 shape's two checkpoints (improved, then the
     merged table) per round. Same distances — the merge arithmetic is
     unchanged, only the materialization schedule moved."""
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"),
         F.col(weight_col).alias("w"),
     )
-    dist = sources.select(
+    dist = ss.ckpt(sources.select(
         F.col(id_col).alias("id"), F.lit(0).cast("bigint").alias("dist")
-    ).distinct()
-    dist = _ckpt(dist, checkpoint)
+    ).distinct())
     frontier = dist
     # round 1 runs at the session's shuffle-partition setting (no size
-    # signal yet); each round then observes its own shuffle inputs —
-    # reached-vertex rows AND touched-edge rows (the relaxation join
-    # output, so a supernode frontier can never under-partition the
-    # next round) — and scales the partition count to the max of both
-    from pyspark.sql import Observation
-
-    with _adaptive_parts(edges.sparkSession, 10 ** 12) as ap:
-        for _round in range(max_iterations):
-            touched = Observation()
+    # signal yet); each round then sizes partitions by the max of its
+    # reached-vertex rows and touched-edge rows (the relaxation join
+    # output, so a supernode frontier can never under-partition)
+    with ss.sized():
+        for _ in ss.rounds(max_iterations, self_join=True):
             cand = (
-                frontier.join(e, frontier["id"] == e["src"], "inner")
-                .observe(touched, F.count(F.lit(1)).alias("n"))
+                ss.touched(frontier.join(e, frontier["id"] == e["src"],
+                                         "inner"))
                 .select(
                     F.col("dst").alias("id"),
                     (F.col("dist") + F.col("w")).alias("cand"),
@@ -672,7 +707,7 @@ def sssp_weighted(
                 F.lit(False),
             )
             # improved-count rides the checkpoint job — no separate probe
-            merged, m = _ckpt_obs(
+            merged, m = ss.ckpt_obs(
                 dist.withColumnRenamed("dist", "old")
                 .join(cand, "id", "full_outer")
                 .select(
@@ -681,17 +716,14 @@ def sssp_weighted(
                     .alias("dist"),
                     better.alias("imp"),
                 ),
-                checkpoint,
                 F.count(F.lit(1)).alias("n"),
                 F.count(F.when(F.col("imp"), True)).alias("imp"),
-                reset_stats=(_round % _RESET_STATS_EVERY
-                             == _RESET_STATS_EVERY - 1),
             )
             dist = merged.drop("imp")
             frontier = merged.filter("imp").drop("imp")
             if m["imp"] == 0:
                 break
-            ap.update(max(m["n"], touched.get["n"]))
+            ss.resize(m["n"])
     return dist
 
 
@@ -777,32 +809,27 @@ def maximal_independent_set(
     vertices are excluded from candidacy and always come back with
     ``in_set=false`` — the same vertex class the SCC implementation
     handles explicitly."""
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
-    und = _ckpt(
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
+    und = ss.ckpt(
         _symmetrize(edges, src, dst)
-        .filter(F.col("a") != F.col("b")).distinct(), checkpoint)
-    all_v = _ckpt(
-        edges.select(F.col(src).alias("id"))
-        .union(edges.select(F.col(dst).alias("id"))).distinct(),
-        checkpoint)
+        .filter(F.col("a") != F.col("b")).distinct())
+    all_v = ss.ckpt(_vertex_ids(edges, src, dst))
     selfed = edges.filter(F.col(src) == F.col(dst)).select(
         F.col(src).alias("id")).distinct()
     # live-vertex count rides each checkpoint job — the loop-top probe
     # is a free integer compare (guide §2.4)
-    live_v, m = _ckpt_obs(all_v.join(selfed, "id", "left_anti"),
-                          checkpoint, F.count(F.lit(1)).alias("n"))
-    n_live = m["n"]
+    live_v, n_live = ss.count(all_v.join(selfed, "id", "left_anti"))
     live_e = und
     chosen_parts: list[DataFrame] = []
-    for rnd in range(max_rounds):
+    for rnd in ss.rounds(max_rounds):
         if n_live == 0:
             break
-        pri = live_v.select(
+        # the priority hash keys on the 0-based round index
+        pri = ss.ckpt(live_v.select(
             "id",
-            F.xxhash64(F.col("id"), F.lit(seed), F.lit(rnd))
+            F.xxhash64(F.col("id"), F.lit(seed), F.lit(rnd - 1))
             .alias("p"),
-        )
-        pri = _ckpt(pri, checkpoint)
+        ))
         # min neighbor priority per vertex (live edges only)
         nbr_min = (
             live_e.join(pri.withColumnRenamed("id", "b"),
@@ -820,32 +847,26 @@ def maximal_independent_set(
             )
             .select("id")
         )
-        winners = _ckpt(winners, checkpoint)
+        winners = ss.ckpt(winners)
         chosen_parts.append(winners)
         removed = winners.unionByName(
             live_e.join(winners.withColumnRenamed("id", "a"), "a",
                         "leftsemi")
             .select(F.col("b").alias("id"))
         ).distinct()
-        removed = _ckpt(removed, checkpoint)
-        live_v, m = _ckpt_obs(live_v.join(removed, "id", "left_anti"),
-                              checkpoint, F.count(F.lit(1)).alias("n"))
-        n_live = m["n"]
-        live_e = _ckpt(
+        removed = ss.ckpt(removed)
+        live_v, n_live = ss.count(live_v.join(removed, "id", "left_anti"))
+        live_e = ss.ckpt(
             live_e.join(removed.withColumnRenamed("id", "a"), "a",
                         "left_anti")
             .join(removed.withColumnRenamed("id", "b"), "b",
                   "left_anti")
-            .select("a", "b"),
-            checkpoint)
+            .select("a", "b"))
     else:
         if n_live > 0:
             raise ValueError(
                 f"MIS did not converge in {max_rounds} rounds")
-    chosen = chosen_parts[0] if chosen_parts else all_v.filter(
-        F.lit(False))
-    for part in chosen_parts[1:]:
-        chosen = chosen.unionByName(part)
+    chosen = _union_all(chosen_parts, all_v.filter(F.lit(False)))
     return all_v.join(
         chosen.withColumn("in_set", F.lit(True)), "id", "left"
     ).select("id", F.coalesce("in_set", F.lit(False)).alias("in_set"))
@@ -902,7 +923,7 @@ def label_propagation(
     while the gather needs a touched-set distinct, a second adjacency
     scan and an extra exploded-edge exchange that cost more than the
     full explode saves. Rejected on that evidence."""
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
     # One prep shuffle: repartition by `a`, then dedup, degree,
     # chunked collect_list and the identity-labels distinct are ALL
     # co-partitioned on `a` (subset rule) — no further exchange.
@@ -929,13 +950,13 @@ def label_propagation(
         .agg(F.collect_list("b").alias("_nbrs"))
         .select("a", "_nbrs")
     )
-    und = _ckpt(adj, checkpoint)
-    labels = und.select(F.col("a").alias("id")).distinct().select(
+    und = ss.ckpt(adj)
+    labels = ss.ckpt(und.select(F.col("a").alias("id")).distinct().select(
         "id", F.col("id").alias("community")
-    )
-    labels = _ckpt(labels, checkpoint)
-    for it in range(max_iterations):
-        if it == 0:
+    ))
+
+    def vote(labels, rnd):
+        if rnd == 1:
             # Identity-label fast path: in round 1 every neighbor
             # holds a DISTINCT label (its own id), so every vote count
             # is 1 and "most frequent, smallest wins" collapses to
@@ -972,25 +993,15 @@ def label_propagation(
             )
         # changed-flag rides the labels row — the convergence check is
         # a filter on the checkpointed result, not another id join
-        new_labels = (
-            labels.join(best, "id", "left")
-            .select(
-                "id",
-                F.coalesce("new_community", "community").alias("community"),
-                (F.col("new_community").isNotNull()
-                 & (F.col("new_community") != F.col("community")))
-                .alias("chg"),
-            )
+        return labels.join(best, "id", "left").select(
+            "id",
+            F.coalesce("new_community", "community").alias("community"),
+            (F.col("new_community").isNotNull()
+             & (F.col("new_community") != F.col("community")))
+            .alias("chg"),
         )
-        new_labels, m = _ckpt_obs(
-            new_labels, checkpoint,
-            F.count(F.when(F.col("chg"), True)).alias("chg"),
-            reset_stats=(it % _RESET_STATS_EVERY
-                         == _RESET_STATS_EVERY - 1))
-        labels = new_labels.drop("chg")
-        if m["chg"] == 0:
-            break
-    return labels
+
+    return ss.until_stable(labels, vote, max_iterations, self_join=True)
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -1023,38 +1034,56 @@ def k_core(
     per-round edge count rides the checkpoint job (observed metric);
     the unchanged side's count is carried from the previous
     iteration instead of recomputed."""
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
     # edge counts ride the checkpoint jobs — no separate count() action
     # per peel round (guide §2.4)
-    und, m = _ckpt_obs(
+    und, und_count = ss.count(
         _symmetrize(edges, src, dst)
-        .filter(F.col("a") != F.col("b")).distinct(), checkpoint,
-        F.count(F.lit(1)).alias("n"),
-    )
-    und_count = m["n"]
-    # each peel round shuffles at most |E_live| rows; scale the
-    # reduce-partition count to the observed (shrinking) edge count
-    with _adaptive_parts(edges.sparkSession, und_count) as ap:
-        for _ in range(max_iterations):
+        .filter(F.col("a") != F.col("b")).distinct())
+    # each peel round shuffles at most |E_live| rows (shrinking)
+    with ss.sized(und_count):
+        for _ in ss.rounds(max_iterations):
             deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
             keep = deg.filter(F.col("d") >= k).select("a")
             pruned = (
                 und.join(keep, "a", "leftsemi")
                 .join(keep.withColumnRenamed("a", "b"), "b", "leftsemi")
             )
-            pruned, m = _ckpt_obs(
-                pruned.select("a", "b"), checkpoint,
-                F.count(F.lit(1)).alias("n"))
-            pruned_count = m["n"]
+            pruned, pruned_count = ss.count(pruned.select("a", "b"))
             if pruned_count == und_count:
                 break
             und, und_count = pruned, pruned_count
-            ap.update(und_count)
+            ss.resize(und_count)
     return (
         und.groupBy(F.col("a").alias("id"))
         .agg(F.count(F.lit(1)).alias("degree"))
         .filter(F.col("degree") >= k)
     )
+
+
+def _bfs_edges(edges: DataFrame, src: str, dst: str,
+               directed: bool) -> DataFrame:
+    """Distinct (src, dst) edges, both orientations unless directed."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    if not directed:
+        e = _symmetrize(e, "src", "dst").select(
+            F.col("a").alias("src"), F.col("b").alias("dst"))
+    return e.distinct()
+
+
+def _seed_sample(ss: _Supersteps, e: DataFrame, n_samples, seed: int):
+    """``(vertices, n, seeds, k)`` for the sampled-sources estimators:
+    the vertex set of ``e`` (checkpointed and counted in one job) and
+    its ``k`` seeds ``(s)`` — every vertex, or the ``n_samples``
+    smallest ``xxhash64(id, seed)`` (TakeOrdered top-k, no full sort)."""
+    vertices, n = ss.count(_vertex_ids(e))
+    if n_samples is None or n_samples >= n:
+        return vertices, n, vertices.select(F.col("id").alias("s")), n
+    seeds = (
+        vertices.orderBy(F.xxhash64(F.col("id"), F.lit(seed)))
+        .limit(n_samples).select(F.col("id").alias("s"))
+    )
+    return vertices, n, seeds, n_samples
 
 
 def harmonic_centrality(
@@ -1089,44 +1118,25 @@ def harmonic_centrality(
     ``directed=False`` (default) symmetrizes the edge list first;
     ``directed=True`` measures d(seed -> v) along edge direction.
     """
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not directed:
-        e = _symmetrize(e, "src", "dst").select(
-            F.col("a").alias("src"), F.col("b").alias("dst"))
-    e = e.distinct()
-    vertices = e.select(F.col("src").alias("id")).union(
-        e.select(F.col("dst").alias("id"))).distinct()
-    vertices, _m = _ckpt_obs(vertices, checkpoint,
-                             F.count(F.lit(1)).alias("n"))
-    n = _m["n"]
-    if n_samples is None or n_samples >= n:
-        seeds, k = vertices.select(F.col("id").alias("s")), n
-    else:
-        seeds = (
-            vertices.orderBy(F.xxhash64(F.col("id"), F.lit(seed)))
-            .limit(n_samples).select(F.col("id").alias("s"))
-        )
-        k = n_samples
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
+    e = _bfs_edges(edges, src, dst, directed)
+    vertices, n, seeds, k = _seed_sample(ss, e, n_samples, seed)
     # (id, s, dist): distance from seed s to vertex id
-    visited = seeds.select(
-        F.col("s").alias("id"), F.col("s"), F.lit(0).alias("dist"))
-    visited = _ckpt(visited, checkpoint)
+    visited = ss.ckpt(seeds.select(
+        F.col("s").alias("id"), F.col("s"), F.lit(0).alias("dist")))
     frontier = visited
-    for hop in range(1, max_hops + 1):
-        new_frontier = (
+    for hop in ss.rounds(max_hops):
+        # frontier size rides the checkpoint job — no separate probe
+        new_frontier, n_new = ss.count(
             frontier.join(e, frontier["id"] == e["src"], "inner")
             .select(F.col("dst").alias("id"), "s")
             .distinct()
             .join(visited, ["id", "s"], "left_anti")
             .select("id", "s", F.lit(hop).alias("dist"))
         )
-        # frontier size rides the checkpoint job — no separate probe
-        new_frontier, m = _ckpt_obs(
-            new_frontier, checkpoint, F.count(F.lit(1)).alias("n"))
-        if m["n"] == 0:
+        if n_new == 0:
             break
-        visited = _ckpt(visited.unionByName(new_frontier), checkpoint)
+        visited = ss.ckpt(visited.unionByName(new_frontier))
         frontier = new_frontier
     contrib = (
         visited.filter(F.col("dist") > 0)
@@ -1180,48 +1190,28 @@ def betweenness_centrality(
     deep graphs). When the frontier is still non-empty at the cap a
     warning is emitted so exact-mode callers notice the truncation.
     """
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
-    import warnings
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not directed:
-        e = _symmetrize(e, "src", "dst").select(
-            F.col("a").alias("src"), F.col("b").alias("dst"))
-    e = _ckpt(e.distinct(), checkpoint)
-    vertices = e.select(F.col("src").alias("id")).union(
-        e.select(F.col("dst").alias("id"))).distinct()
-    vertices, _m = _ckpt_obs(vertices, checkpoint,
-                             F.count(F.lit(1)).alias("n"))
-    n = _m["n"]
-    if n_samples is None or n_samples >= n:
-        seeds, k = vertices.select(F.col("id").alias("s")), n
-    else:
-        seeds = (
-            vertices.orderBy(F.xxhash64(F.col("id"), F.lit(seed)))
-            .limit(n_samples).select(F.col("id").alias("s"))
-        )
-        k = n_samples
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
+    e = ss.ckpt(_bfs_edges(edges, src, dst, directed))
+    vertices, n, seeds, k = _seed_sample(ss, e, n_samples, seed)
     # forward: levels[t] = (s, id, sigma) — shortest-path counts
-    level = _ckpt(seeds.select(
+    level = ss.ckpt(seeds.select(
         "s", F.col("s").alias("id"),
-        F.lit(1).cast("bigint").alias("sigma")), checkpoint)
+        F.lit(1).cast("bigint").alias("sigma")))
     levels = [level]
-    visited = level.select("s", "id")
-    visited = _ckpt(visited, checkpoint)
-    for _ in range(max_hops):
-        nxt = (
+    visited = ss.ckpt(level.select("s", "id"))
+    for _ in ss.rounds(max_hops):
+        # frontier size rides the checkpoint job — no separate probe
+        nxt, n_nxt = ss.count(
             level.join(e, level["id"] == e["src"], "inner")
             .select("s", F.col("dst").alias("id"), "sigma")
             .join(visited, ["s", "id"], "left_anti")
             .groupBy("s", "id")
             .agg(F.sum("sigma").alias("sigma"))
         )
-        # frontier size rides the checkpoint job — no separate probe
-        nxt, m = _ckpt_obs(nxt, checkpoint, F.count(F.lit(1)).alias("n"))
-        if m["n"] == 0:
+        if n_nxt == 0:
             break
         levels.append(nxt)
-        visited = _ckpt(
-            visited.unionByName(nxt.select("s", "id")), checkpoint)
+        visited = ss.ckpt(visited.unionByName(nxt.select("s", "id")))
         level = nxt
     else:
         # loop ran out before the frontier drained: paths beyond the
@@ -1275,16 +1265,13 @@ def betweenness_centrality(
             )
             .groupBy("s", "id").agg(F.sum("_c").alias("d"))
         )
-        delta = _ckpt(cur, checkpoint)
+        delta = ss.ckpt(cur)
         if t > 0:  # the seed's own delta is not betweenness
             acc.append(delta)
     if not acc:
         return vertices.select(
             "id", F.lit(0.0).alias("centrality"))
-    out = acc[0]
-    for part in acc[1:]:
-        out = out.unionByName(part)
-    scores = out.groupBy("id").agg(F.sum("d").alias("_d"))
+    scores = _union_all(acc).groupBy("id").agg(F.sum("d").alias("_d"))
     return vertices.join(scores, "id", "left").select(
         "id",
         (F.coalesce(F.col("_d"), F.lit(0)) / F.lit(float(MICRO))
@@ -1353,7 +1340,7 @@ def strongly_connected_components(
     plus DAG-like tails, and the tails go to trim; an acyclic graph
     drains entirely inside round 1's trim loop). Each superstep of
     every inner loop is a join + aggregate on the LIVE subgraph, which
-    shrinks every round; lineage is localCheckpoint-truncated
+    shrinks every round; lineage is checkpoint-truncated
     throughout. Raises if ``max_rounds`` outer rounds don't drain the
     graph.
 
@@ -1392,7 +1379,7 @@ def strongly_connected_components(
     ~18% slower than the frontier-BFS whose per-round work shrinks
     with the frontier.
     """
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
     pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # Vertex set from the UNFILTERED edge list: a vertex whose only
     # edges are self-loops is still a valid (singleton) SCC — only the
@@ -1400,28 +1387,21 @@ def strongly_connected_components(
     # live-vertex counts ride the checkpoint jobs throughout (r14,
     # guide §2.4): every convergence/emptiness probe below is a free
     # integer compare instead of its own job.
-    live_v, m = _ckpt_obs(
-        pairs.select(F.col("u").alias("id"))
-        .union(pairs.select(F.col("v").alias("id"))).distinct(),
-        checkpoint, F.count(F.lit(1)).alias("n"))
-    n_live = m["n"]
-    e_live, m = _ckpt_obs(
-        pairs.filter(F.col("u") != F.col("v")).distinct(), checkpoint,
-        F.count(F.lit(1)).alias("n"))
-    n_edges = m["n"]
+    live_v, n_live = ss.count(_vertex_ids(pairs, "u", "v"))
+    e_live, n_edges = ss.count(
+        pairs.filter(F.col("u") != F.col("v")).distinct())
     done_parts: list[DataFrame] = []
     # every superstep below shuffles at most max(|E_live|, |V_live|)
-    # rows; scale the loop's reduce-partition count to that (the edge
-    # counts keep riding the e_live checkpoints)
-    with _adaptive_parts(edges.sparkSession, max(n_live, n_edges)) as ap:
-        for _ in range(max_rounds):
+    # rows (the edge counts keep riding the e_live checkpoints)
+    with ss.sized(max(n_live, n_edges)):
+        for _ in ss.rounds(max_rounds):
             if n_live == 0:
                 break
             # 0) trim trivial SCCs in bulk until stable: the keep set
             # (vertices with BOTH a live in- and out-edge) from ONE
             # doubled-edge aggregate (guide §2.4)
-            while True:
-                keep = (
+            for _ in ss.rounds():
+                keep, n_keep = ss.count(
                     e_live.select(F.col("u").alias("id"),
                                   F.lit(1).alias("o"), F.lit(0).alias("i"))
                     .union(e_live.select(F.col("v").alias("id"),
@@ -1432,27 +1412,22 @@ def strongly_connected_components(
                     .filter((F.col("has_o") == 1) & (F.col("has_i") == 1))
                     .select("id")
                 )
-                keep, m = _ckpt_obs(keep, checkpoint,
-                                    F.count(F.lit(1)).alias("n"))
                 # keep ⊆ live_v, so the trim fixpoint test is a count
                 # compare riding keep's checkpoint job — the per-peel
                 # anti-join probe job is gone entirely (r14, guide §2.4);
                 # trimmed itself stays lazy (re-derived from two
                 # checkpointed frames only when a peel really happened)
-                if m["n"] == n_live:
+                if n_keep == n_live:
                     break
                 trimmed = live_v.join(keep, "id", "left_anti")
                 done_parts.append(trimmed.select("id", F.col("id").alias("scc")))
-                live_v = keep
-                n_live = m["n"]
-                e_live, m = _ckpt_obs(
+                live_v, n_live = keep, n_keep
+                e_live, n_edges = ss.count(
                     e_live.join(keep.withColumnRenamed("id", "u"), "u",
                                 "leftsemi")
                     .join(keep.withColumnRenamed("id", "v"), "v", "leftsemi")
-                    .select("u", "v"),
-                    checkpoint, F.count(F.lit(1)).alias("n"))
-                n_edges = m["n"]
-                ap.update(max(n_live, n_edges))
+                    .select("u", "v"))
+                ss.resize(n_live, n_edges)
             if n_live == 0:
                 break
             # 1) forward min-coloring to fixpoint: per superstep, the new
@@ -1466,15 +1441,13 @@ def strongly_connected_components(
             # union: it doubles the covered ancestor distance per round,
             # capping a diameter-bounded loop at O(log) barriers while
             # costing shallow graphs nothing (see docstring).
-            colors = live_v.select("id", F.col("id").alias("color"))
-            colors = _ckpt(colors, checkpoint)
-            superstep = 0
+            colors = ss.ckpt(live_v.select("id", F.col("id").alias("color")))
             # the union's null 'old' must carry the id column's ACTUAL
             # dtype — hardcoding long breaks direct callers with string
             # ids (analysis error under ANSI, silent widening otherwise)
             id_type = colors.schema["color"].dataType
-            while True:
-                superstep += 1
+
+            def color_step(colors, superstep):
                 own = colors.select(
                     "id", F.col("color"), F.col("color").alias("old"))
                 prop = (
@@ -1492,7 +1465,7 @@ def strongly_connected_components(
                                 F.lit(None).cast(id_type).alias("old"))
                     )
                     cand = cand.union(jump)
-                new_colors = (
+                return (
                     cand
                     .groupBy("id")
                     .agg(F.min("color").alias("color"),
@@ -1500,18 +1473,12 @@ def strongly_connected_components(
                     .select("id", "color",
                             (F.col("color") < F.col("old")).alias("chg"))
                 )
-                new_colors, m = _ckpt_obs(
-                    new_colors, checkpoint,
-                    F.count(F.when(F.col("chg"), True)).alias("chg"),
-                    reset_stats=(
-                        superstep % _RESET_STATS_EVERY == 0))
-                colors = new_colors.drop("chg")
-                if m["chg"] == 0:
-                    break
+
+            colors = ss.until_stable(colors, color_step, self_join=True)
             # 2) backward sweep from the roots within each color class:
             # frontier BFS while shallow — its per-round work shrinks
             # with the frontier and each edge is touched at most once
-            # across the whole sweep. From _SWEEP_JUMP_AFTER rounds on
+            # across the whole sweep. After _SWEEP_JUMP_AFTER rounds
             # (r15, VERDICT r14 #6 — same device as the coloring
             # fixpoint), switch to a MIN-REACHABILITY pointer-jump
             # fixpoint so a deep component costs O(log d) further
@@ -1523,26 +1490,21 @@ def strongly_connected_components(
             # reachable-from-v within the class, and descendants of a
             # descendant are descendants). Shallow sweeps — the common
             # case — never pay the V-sized jump rounds.
-            marked = colors.filter(F.col("id") == F.col("color"))
-            marked = _ckpt(marked, checkpoint)
+            marked = ss.ckpt(colors.filter(F.col("id") == F.col("color")))
             frontier = marked
-            sweep_converged = False
-            for _sweep in range(_SWEEP_JUMP_AFTER):
+            for _ in ss.rounds(_SWEEP_JUMP_AFTER):
                 preds = (
                     frontier.join(e_live, frontier["id"] == e_live["v"])
                     .select(F.col("u").alias("id"), "color")
                     .distinct()
                 )
-                grow = (
+                grow, n_grow = ss.count(
                     preds.join(colors.withColumnRenamed("color", "c2"), "id")
                     .filter(F.col("color") == F.col("c2"))
                     .select("id", "color")
                     .join(marked, "id", "left_anti")
                 )
-                grow, m = _ckpt_obs(grow, checkpoint,
-                                    F.count(F.lit(1)).alias("n"))
-                if m["n"] == 0:
-                    sweep_converged = True
+                if n_grow == 0:
                     break
                 # marked stays a lazy union of CHECKPOINTED grows — the
                 # per-round anti-join reads cached blocks either way, so
@@ -1550,7 +1512,7 @@ def strongly_connected_components(
                 # job per sweep round)
                 marked = marked.unionByName(grow)
                 frontier = grow
-            if not sweep_converged:
+            else:
                 # Pointer-jump tail on HASH-PRIORITY pointers (r15).
                 # p(v) is a vertex known reachable from v within v's
                 # color class, chosen to minimize the key
@@ -1564,7 +1526,7 @@ def strongly_connected_components(
                 # measured O(depth) on ascending-id paths: every
                 # pointer stays self until the wave arrives, and the
                 # self-join stats compound meanwhile — see
-                # _STATS_BITS_CAP.) At the fixpoint p(v) is the
+                # _reset_stats.) At the fixpoint p(v) is the
                 # key-minimal reachable vertex, whose flag is 0 iff v
                 # reaches the BFS-marked set — i.e. iff v ~> root —
                 # so the RESULT is a graph property, independent of
@@ -1572,7 +1534,7 @@ def strongly_connected_components(
                 # set ONCE (colors is fixed for the whole sweep);
                 # each round keeps the coloring loop's union -> one
                 # aggregate shape, with a struct-min in place of min.
-                e_same = (
+                e_same = ss.ckpt(
                     e_live.join(colors.select(F.col("id").alias("u"),
                                               F.col("color").alias("_cu")),
                                 "u")
@@ -1581,13 +1543,11 @@ def strongly_connected_components(
                     .filter(F.col("_cu") == F.col("_cv"))
                     .select("u", "v")
                 )
-                e_same = _ckpt(e_same, checkpoint)
                 mk = marked.select("id", F.lit(0).alias("_mk"))
-                reach = _ckpt(
+                reach = ss.ckpt(
                     colors.join(mk, "id", "left")
                     .select("id", F.col("id").alias("p"),
-                            F.coalesce("_mk", F.lit(1)).alias("pf")),
-                    checkpoint)
+                            F.coalesce("_mk", F.lit(1)).alias("pf")))
 
                 def _key(p="p", pf="pf"):
                     return F.struct(
@@ -1597,9 +1557,8 @@ def strongly_connected_components(
 
                 _null_key = F.lit(None).cast(
                     f"struct<pf:int,h:bigint,p:{id_type.simpleString()}>")
-                jump_round = 0
-                while True:
-                    jump_round += 1
+
+                def jump_step(reach, _round):
                     own = reach.select(
                         "id", _key().alias("k"), _key().alias("old"))
                     prop = (
@@ -1615,7 +1574,7 @@ def strongly_connected_components(
                         .select("id", F.col("_jk").alias("k"),
                                 _null_key.alias("old"))
                     )
-                    new_reach = (
+                    return (
                         own.union(prop).union(jump)
                         .groupBy("id")
                         .agg(F.min("k").alias("k"),
@@ -1624,44 +1583,28 @@ def strongly_connected_components(
                                 F.col("k.pf").alias("pf"),
                                 (F.col("k") < F.col("old")).alias("chg"))
                     )
-                    new_reach, m = _ckpt_obs(
-                        new_reach, checkpoint,
-                        F.count(F.when(F.col("chg"), True)).alias("chg"),
-                        reset_stats=(
-                            jump_round % _RESET_STATS_EVERY == 0))
-                    reach = new_reach.drop("chg")
-                    if m["chg"] == 0:
-                        break
+
+                reach = ss.until_stable(reach, jump_step, self_join=True)
                 # marked feeds done_parts + three live-set anti-joins;
                 # checkpoint the filtered result once instead of
                 # replaying it per consumer
-                marked = _ckpt(
+                marked = ss.ckpt(
                     reach.filter(F.col("pf") == 0)
                     .join(colors, "id")
-                    .select("id", "color"),
-                    checkpoint)
+                    .select("id", "color"))
             done_parts.append(marked.select("id", F.col("color").alias("scc")))
             # 3) shrink the live subgraph
-            live_v, m = _ckpt_obs(live_v.join(marked, "id", "left_anti"),
-                                  checkpoint, F.count(F.lit(1)).alias("n"))
-            n_live = m["n"]
-            e_live, m = _ckpt_obs(
+            live_v, n_live = ss.count(live_v.join(marked, "id", "left_anti"))
+            e_live, n_edges = ss.count(
                 e_live.join(marked.select(F.col("id").alias("u")), "u",
                             "left_anti")
                 .join(marked.select(F.col("id").alias("v")), "v", "left_anti")
-                .select("u", "v"),
-                checkpoint, F.count(F.lit(1)).alias("n"))
-            n_edges = m["n"]
-            ap.update(max(n_live, n_edges))
+                .select("u", "v"))
+            ss.resize(n_live, n_edges)
         else:
             if n_live > 0:
                 raise ValueError(
                     f"SCC did not converge in {max_rounds} outer rounds; "
                     "raise max_rounds")
-    if not done_parts:
-        return live_v.select(
-            "id", F.col("id").alias("scc")).filter(F.lit(False))
-    out = done_parts[0]
-    for part in done_parts[1:]:
-        out = out.unionByName(part)
-    return out
+    return _union_all(done_parts, live_v.select(
+        "id", F.col("id").alias("scc")).filter(F.lit(False)))

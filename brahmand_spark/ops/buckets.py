@@ -15,7 +15,7 @@ default embedded catalog in local mode.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -28,20 +28,3 @@ def write_bucketed(
         writer = writer.sortBy(*bucket_cols)
     writer.saveAsTable(table_name)
 
-
-def cobucket_graph_tables(
-    session, labels_and_keys: dict[str, str], num_buckets: int = 64,
-    prefix: str = "bkt_",
-) -> dict[str, str]:
-    """Bucket a set of node/edge tables on their join keys and re-register
-    them in the GraphSession, so subsequent Cypher traversals plan
-    exchange-free joins. Returns label -> bucketed table name."""
-    spark = session.spark
-    out = {}
-    for label, key in labels_and_keys.items():
-        df = session._load_for_label(label)
-        name = f"{prefix}{label.lower()}"
-        write_bucketed(df, name, [key], num_buckets)
-        session.register_table(label, spark.table(name))
-        out[label] = name
-    return out

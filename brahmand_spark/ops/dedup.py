@@ -760,7 +760,7 @@ def embedding_near_dup_pairs(
     broadcast: scales to arbitrarily large corpora.
     """
     if method == "lsh":
-        from .similarity import _hyperplanes, dot as _dot
+        from .similarity import _hyperplanes, _sql_double, dot as _dot
         from .similarity import norm as _norm
 
         d = dim
@@ -784,7 +784,7 @@ def embedding_near_dup_pairs(
         # similarity._cents_lit; repr doubles round-trip exactly).
         tables_lit = F.expr("array(%s)" % ", ".join(
             "array(%s)" % ", ".join(
-                "array(%s)" % ", ".join(f"{float(x)!r}D" for x in plane)
+                "array(%s)" % ", ".join(_sql_double(x) for x in plane)
                 for plane in _hyperplanes(probe_dim, n_planes, seed + t))
             for t in range(n_tables)
         ))

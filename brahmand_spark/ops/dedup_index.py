@@ -171,10 +171,6 @@ def dedup_index_frames(
     return sigs.select("id", "fp", "signature"), buckets
 
 
-def _stats_path(params: dict) -> str:
-    return params["buckets_path"] + ".stats"
-
-
 def build_dedup_index(
     df: DataFrame, name: str, store,
     id_col: str = "doc_id", text_col: str = "text",

@@ -47,14 +47,6 @@ def deterministic_split(
     return df.withColumn(split_col, expr)
 
 
-def hash_sample(
-    df: DataFrame, fraction: float, id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Keep a deterministic ``fraction`` of rows."""
-    return df.filter(_unit_hash(F.col(id_col), seed) < F.lit(fraction))
-
-
 def stratified_sample(
     df: DataFrame, strata_col: str, fractions: dict, id_col: str = "doc_id",
     default_fraction: float = 0.0, seed: int = 42,

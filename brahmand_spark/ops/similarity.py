@@ -168,6 +168,18 @@ def train_ivf_centroids(
     return _kmeans(X, n_cells, iters, seed)
 
 
+def _sql_double(x) -> str:
+    """``x`` as a Spark SQL double literal. ``repr`` round-trips a
+    finite double exactly; NaN and the infinities (``nan``/``inf`` to
+    ``repr``, which the SQL parser rejects) become string casts."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
 def _cents_lit(centroids: list[list[float]]) -> Column:
     """The centroid matrix as a literal array of (plane, half-norm)
     structs, built from ONE parsed SQL string instead of cells*dim
@@ -179,8 +191,8 @@ def _cents_lit(centroids: list[list[float]]) -> Column:
     bit-identical to the ``F.lit`` form."""
     rows = ", ".join(
         "named_struct('c', array(%s), 'h', %s)" % (
-            ", ".join(f"{float(x)!r}D" for x in c),
-            f"{sum(float(x) * float(x) for x in c) / 2.0!r}D",
+            ", ".join(_sql_double(x) for x in c),
+            _sql_double(sum(float(x) * float(x) for x in c) / 2.0),
         )
         for c in centroids
     )

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _as_double, _hyperplanes
+from .similarity import _as_double, _hyperplanes, _sql_double
 
 
 def group_quantiles(df: DataFrame, value_col: str,
@@ -91,10 +91,10 @@ def random_projection(df: DataFrame, out_dim: int,
     # chain matches dot(dim=...) term for term and repr round-trips
     # each double exactly, so projections are bit-identical.
     comp_sqls = [
-        "round((%s) * %rD, 6)" % (
-            " + ".join(f"{float(x)!r}D * element_at(_v, {i + 1})"
+        "round((%s) * %s, 6)" % (
+            " + ".join(f"{_sql_double(x)} * element_at(_v, {i + 1})"
                        for i, x in enumerate(plane)),
-            float(scale),
+            _sql_double(scale),
         )
         for plane in planes
     ]
@@ -279,9 +279,9 @@ def pca_transform(
             raise ValueError("component/mean dimensionality mismatch")
         offset = sum(float(ci) * float(mi) for ci, mi in zip(c, mean))
         body = " + ".join(
-            f"{float(ci)!r}D * element_at(_v, {i + 1})"
+            f"{_sql_double(ci)} * element_at(_v, {i + 1})"
             for i, ci in enumerate(c))
-        comp_sqls.append(f"round(({body}) - {float(offset)!r}D, 6)")
+        comp_sqls.append(f"round(({body}) - {_sql_double(offset)}, 6)")
     return df.select(
         F.col(id_col).alias("_id"),
         _as_double(F.col(vec_col)).alias("_v"),

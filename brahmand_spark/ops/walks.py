@@ -27,8 +27,8 @@ Spark shape, deterministic by construction:
   engine replays (pure Python / DuckDB) all agree;
 - a step is ONE equi-join of the frontier against the ranked adjacency
   (shuffle keyed by the current vertex), walk_length steps total —
-  the same superstep shape as the iterative algorithms, lineage cut
-  by localCheckpoint;
+  the same superstep shape as the iterative algorithms, run through
+  the same superstep runner (ops/algos._Supersteps);
 - dead ends (out-degree 0) terminate the walk early; the emitted
   sequence keeps the visited prefix, exactly like the reference
   implementations.
@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .algos import _adaptive_parts, _ckpt, _ckpt_obs, _prepare_ckpt
+from .algos import _Supersteps, _vertex_ids
 from .text import md5_hash60
 
 
@@ -156,7 +156,7 @@ def random_walks(
     are no longer materialized. Same walks (the join/filter/project
     arithmetic is unchanged), 1/interval of the per-step barrier
     jobs."""
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
     if n_walks < 1 or walk_length < 1:
         raise ValueError("n_walks and walk_length must be >= 1")
     if ckpt_interval < 1:
@@ -164,10 +164,9 @@ def random_walks(
     # validate BEFORE the eager adjacency checkpoint: the loud type
     # failure must not cost a full ranked-adjacency job first
     starts = _walk_starts(edges, starts, src, dst, "random_walks")
-    adj, _ma = _ckpt_obs(
+    adj, n_adj = ss.count(
         ranked_adjacency(edges, src, dst, max_degree=max_degree,
-                         n_buckets=n_buckets), checkpoint,
-        F.count(F.lit(1)).alias("n"))
+                         n_buckets=n_buckets))
     state = starts.select(
         F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("_w"),
         F.col("id").alias("start"),
@@ -178,35 +177,18 @@ def random_walks(
         F.col("start").alias("cur"),
         F.lit(True).alias("live"),
     )
-    state, _ms = _ckpt_obs(state, checkpoint,
-                           F.count(F.lit(1)).alias("n"))
-    since = 0
+    state, n_state = ss.count(state)
     # each step shuffles at most max(|adj|, |walks|) rows (both counts
-    # rode the prep checkpoints); scale reduce partitions to that
-    with _adaptive_parts(edges.sparkSession, max(_ma["n"], _ms["n"])):
-        for t in range(1, walk_length):
+    # rode the prep checkpoints)
+    with ss.sized(max(n_adj, n_state)):
+        for t in ss.rounds(walk_length - 1):
             h = md5_hash60(F.concat(
                 F.lit(f"w:{seed}:"), F.col("walk_id").cast("string"),
                 F.lit(":"), F.lit(t).cast("string")))
-            state = (
-                state.join(adj,
-                           state["live"] & (state["cur"] == adj["u"]),
-                           "left")
-                .filter(F.col("u").isNull()
-                        | (F.col("rank") == F.pmod(h, F.col("degree"))))
-                .select(
-                    F.col("walk_id"), F.col("start"),
-                    F.when(F.col("v").isNull(), F.col("walk"))
-                    .otherwise(F.concat("walk", F.array("v")))
-                    .alias("walk"),
-                    F.coalesce("v", "cur").alias("cur"),
-                    F.col("v").isNotNull().alias("live"),
-                )
-            )
-            since += 1
-            if since >= ckpt_interval and t < walk_length - 1:
-                state = _ckpt(state, checkpoint)
-                since = 0
+            state = _uniform_step(state, adj, h, with_prev=False,
+                                  gated=True)
+            if t % ckpt_interval == 0 and t < walk_length - 1:
+                state = ss.ckpt(state)
     return state.select("walk_id", "start", "walk")
 
 
@@ -216,8 +198,7 @@ def _walk_starts(edges, starts, src, dst, fn_name):
     n_walks + index is meaningless on string ids — fail loudly and
     free, ADVICE r5 / review r6)."""
     if starts is None:
-        starts = edges.select(F.col(src).alias("id")).union(
-            edges.select(F.col(dst).alias("id"))).distinct()
+        starts = _vertex_ids(edges, src, dst)
     else:
         starts = starts.select(F.col("id"))
     id_type = starts.schema["id"].dataType.typeName()
@@ -229,11 +210,12 @@ def _walk_starts(edges, starts, src, dst, fn_name):
     return starts
 
 
-def _uniform_step(live, adj, h, with_prev: bool):
+def _uniform_step(live, adj, h, with_prev: bool, gated: bool = False):
     """One uniform walk step (rank == H % degree): the shared body of
     random_walks' every step and node2vec's first (prev-less) step —
     ``with_prev`` additionally emits the prev column the biased
-    sampler threads through."""
+    sampler threads through. ``gated`` joins only rows whose ``live``
+    flag is set, so dead walks ride through the left join unmatched."""
     cols = [
         F.col("walk_id"), F.col("start"),
         F.when(F.col("v").isNull(), F.col("walk"))
@@ -244,8 +226,9 @@ def _uniform_step(live, adj, h, with_prev: bool):
         cols.append(
             F.when(F.col("v").isNotNull(), F.col("cur")).alias("prev"))
     cols.append(F.col("v").isNotNull().alias("live"))
+    cond = live["cur"] == adj["u"]
     return (
-        live.join(adj, live["cur"] == adj["u"], "left")
+        live.join(adj, live["live"] & cond if gated else cond, "left")
         .filter(F.col("u").isNull()
                 | (F.col("rank") == F.pmod(h, F.col("degree"))))
         .select(*cols)
@@ -408,7 +391,7 @@ def node2vec_walks(
 
     Returns (walk_id, start, walk). Dead ends terminate the walk
     with the visited prefix."""
-    checkpoint = _prepare_ckpt(edges, checkpoint, checkpoint_dir)
+    ss = _Supersteps(edges, checkpoint, checkpoint_dir)
     if n_walks < 1 or walk_length < 1:
         raise ValueError("n_walks and walk_length must be >= 1")
     # bound p/q so every micro-weight is >= 1 (a rounded-to-zero
@@ -427,19 +410,18 @@ def node2vec_walks(
     w_ret = int(round(1_000_000 / p))
     w_in = 1_000_000
     w_out = int(round(1_000_000 / q))
-    adj = _ckpt(
+    adj = ss.ckpt(
         ranked_adjacency(edges, src, dst, max_degree=max_degree,
-                         n_buckets=n_buckets), checkpoint)
+                         n_buckets=n_buckets))
     # distance-1 membership tests against the UNCAPPED edge set: a
     # real prev->v edge must weigh 1 (in) even when max_degree pruned
     # it from the candidate sample — testing against the capped
     # adjacency would mis-weight it 1/q (ADVICE r6). The candidate
     # CAP itself (what v can be stepped to) stays, per standard
     # node2vec neighbor sampling.
-    member = _ckpt(
+    member = ss.ckpt(
         edges.select(F.col(src).alias("_mp"),
-                     F.col(dst).alias("_mv")).distinct(),
-        checkpoint)
+                     F.col(dst).alias("_mv")).distinct())
     state = starts.select(
         F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("_w"),
         F.col("id").alias("start"),
@@ -451,8 +433,8 @@ def node2vec_walks(
         F.lit(None).cast("long").alias("prev"),
         F.lit(True).alias("live"),
     )
-    state = _ckpt(state, checkpoint)
-    for t in range(1, walk_length):
+    state = ss.ckpt(state)
+    for t in ss.rounds(walk_length - 1):
         h = md5_hash60(F.concat(
             F.lit(f"n2v:{seed}:"), F.col("walk_id").cast("string"),
             F.lit(":"), F.lit(t).cast("string")))
@@ -496,7 +478,5 @@ def node2vec_walks(
                 F.lit(True).alias("live"),
             )
             stepped = chosen.unionByName(dead)
-        state = _ckpt(
-            stepped.unionByName(state.filter(~F.col("live"))),
-            checkpoint)
+        state = ss.ckpt(stepped.unionByName(state.filter(~F.col("live"))))
     return state.select("walk_id", "start", "walk")

@@ -1143,50 +1143,50 @@ class TestCheckpointEnvPrecedence:
 
 
 class TestAdaptiveParts:
-    """`_adaptive_parts`: loop shuffle partitions scale to observed
+    """`_Supersteps.sized`: loop shuffle partitions scale to observed
     state size, never above the session setting, always restored —
     and the count is a perf knob only (identical results)."""
 
     def test_shrinks_and_restores(self, spark):
-        from brahmand_spark.ops.algos import _adaptive_parts
+        from brahmand_spark.ops.algos import _Supersteps
 
         orig = spark.conf.get("spark.sql.shuffle.partitions")
-        with _adaptive_parts(spark, 10) as ap:
+        with _Supersteps(spark.range(1)).sized(10) as ap:
             assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-            ap.update(10 ** 12)  # huge state: clamped at the original
+            ap.resize(10 ** 12)  # huge state: clamped at the original
             assert spark.conf.get("spark.sql.shuffle.partitions") == orig
-            ap.update(5)
+            ap.resize(5)
             assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
         assert spark.conf.get("spark.sql.shuffle.partitions") == orig
 
     def test_noop_when_rows_large(self, spark):
-        from brahmand_spark.ops.algos import _adaptive_parts
+        from brahmand_spark.ops.algos import _Supersteps
 
         orig = spark.conf.get("spark.sql.shuffle.partitions")
-        with _adaptive_parts(spark, 10 ** 12):
+        with _Supersteps(spark.range(1)).sized(10 ** 12):
             assert spark.conf.get("spark.sql.shuffle.partitions") == orig
 
     def test_nested_loop_is_noop_and_restore_is_outermost(self, spark):
         """r15 (ADVICE): a nested/concurrent loop on the same session
         must NOT capture the outer loop's shrunken value as its 'orig'
         — the inner one is a no-op, the outer restore wins."""
-        from brahmand_spark.ops.algos import _adaptive_parts
+        from brahmand_spark.ops.algos import _Supersteps
 
         orig = spark.conf.get("spark.sql.shuffle.partitions")
-        with _adaptive_parts(spark, 10):
+        with _Supersteps(spark.range(1)).sized(10):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-            with _adaptive_parts(spark, 10 ** 12) as inner:
+            with _Supersteps(spark.range(1)).sized(10 ** 12) as inner:
                 # inner no-op: setting still the OUTER loop's choice
                 assert spark.conf.get(
                     "spark.sql.shuffle.partitions") == "1"
-                inner.update(10 ** 12)  # must also be inert
+                inner.resize(10 ** 12)  # must also be inert
                 assert spark.conf.get(
                     "spark.sql.shuffle.partitions") == "1"
             # inner exit must not restore anything
             assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
         assert spark.conf.get("spark.sql.shuffle.partitions") == orig
         # a fresh loop after both exited works again
-        with _adaptive_parts(spark, 10):
+        with _Supersteps(spark.range(1)).sized(10):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
         assert spark.conf.get("spark.sql.shuffle.partitions") == orig
 
@@ -1231,6 +1231,86 @@ class TestAdaptiveParts:
         with pytest.raises(ValueError, match="did not converge"):
             strongly_connected_components(edges, max_rounds=0).collect()
         assert spark.conf.get("spark.sql.shuffle.partitions") == orig
+
+
+class TestResetStats:
+    def test_rebuild_failure_warns_once_and_keeps_rows(
+            self, spark, monkeypatch):
+        """A failing row-RDD rebuild must not switch the stats guard
+        off silently: one RuntimeWarning per process, and the frame
+        comes back unchanged."""
+        import itertools
+        import warnings
+
+        import brahmand_spark.ops.algos as algos
+
+        df = spark.range(20).withColumn("k", F.col("id") % 3) \
+            .localCheckpoint()
+        want = sorted(map(tuple, df.collect()))
+
+        class _NoCreate:
+            def createDataFrame(self, *a):
+                raise RuntimeError("createDataFrame unavailable")
+
+        monkeypatch.setattr(algos, "_RESET_FAILURES", itertools.count())
+        monkeypatch.setattr(spark, "_jsparkSession", _NoCreate())
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            outs = [algos._reset_stats(df) for _ in range(3)]
+        monkeypatch.undo()
+        runtime = [w for w in caught
+                   if issubclass(w.category, RuntimeWarning)]
+        assert len(runtime) == 1, [str(w.message) for w in caught]
+        assert "stats reset failed" in str(runtime[0].message)
+        assert all(o is df for o in outs)
+        assert sorted(map(tuple, outs[0].collect())) == want
+
+
+class TestResetPolicy:
+    """Only self-joining loops strip checkpoint stats, on their rounds
+    6, 12, ...; loops that never join their own state never pay it."""
+
+    def _reset_points(self, monkeypatch, run):
+        """Run ``run(algos)`` and return, for every _reset_stats call,
+        how many _ckpt_obs calls had started by then."""
+        import brahmand_spark.ops.algos as algos
+
+        obs_calls, resets = [], []
+        real_obs, real_reset = algos._ckpt_obs, algos._reset_stats
+
+        def counting_obs(*a, **k):
+            obs_calls.append(1)
+            return real_obs(*a, **k)
+
+        def counting_reset(df):
+            resets.append(len(obs_calls))
+            return real_reset(df)
+
+        monkeypatch.setattr(algos, "_ckpt_obs", counting_obs)
+        monkeypatch.setattr(algos, "_reset_stats", counting_reset)
+        run(algos)
+        return resets, len(obs_calls)
+
+    def test_hashmin_resets_on_rounds_6_and_12(self, spark, monkeypatch):
+        path = edges_df(spark, [(i, i + 1) for i in range(13)])
+        resets, n_obs = self._reset_points(
+            monkeypatch,
+            lambda a: a.connected_components(path).collect())
+        # _ckpt_obs call 1 is the edge prep, round r is call r + 1: a
+        # 14-vertex path takes 13 label-moving rounds + 1 quiet one
+        assert n_obs == 15
+        assert resets == [7, 13]
+
+    def test_linear_loops_never_reset(self, spark, monkeypatch):
+        path = edges_df(spark, [(i, i + 1) for i in range(29)])
+        srcs = spark.createDataFrame([(0,)], "id long")
+        resets, n_obs = self._reset_points(monkeypatch, lambda a: (
+            a.k_core(path, 2).collect(),
+            a.bfs_distances(path, srcs, max_hops=20).collect(),
+            a.pagerank(path, iterations=13).collect(),
+        ))
+        assert n_obs > 12  # enough rounds to pass 6 and 12
+        assert resets == []
 
 
 class TestCkptObs:

@@ -191,6 +191,40 @@ class TestPca:
             assert np.allclose(got[r["vec_id"]], np.round(want, 6),
                                atol=2e-6)
 
+    def test_non_finite_doubles_propagate(self, spark):
+        """A NaN / infinite mean or component renders as a SQL cast
+        (not ``nanD``, a ParseException) and propagates as NaN; a NaN
+        inside an input vector propagates the same way."""
+        import math
+
+        from brahmand_spark.ops.stats import pca_transform
+
+        emb = spark.createDataFrame(
+            [(1, [1.0, 2.0]), (2, [float("nan"), 0.5])],
+            "vec_id long, embedding array<double>")
+        got = {r["vec_id"]: list(r["projected"]) for r in pca_transform(
+            emb, [0.0, 0.0], [[1.0, 0.0], [0.0, 1.0]]).collect()}
+        assert got[1] == [1.0, 2.0]
+        # each coordinate is a full dot product, so 0 * NaN taints all
+        assert all(math.isnan(x) for x in got[2])
+        got = [list(r["projected"]) for r in pca_transform(
+            emb, [float("nan"), 0.0],
+            [[1.0, 0.0], [0.0, float("inf")]]).collect()]
+        assert len(got) == 2
+        assert all(math.isnan(x) for p in got for x in p)
+
+    def test_sql_double_round_trips_non_finite(self, spark):
+        import math
+
+        from brahmand_spark.ops.similarity import _sql_double
+
+        vals = [0.1, -0.0, 1e308, float("inf"), float("-inf")]
+        row = spark.sql("SELECT " + ", ".join(
+            f"{_sql_double(v)} AS c{i}"
+            for i, v in enumerate(vals + [float("nan")]))).first()
+        assert list(row)[:-1] == vals
+        assert math.isnan(row[-1])
+
     def test_deterministic_under_repartition(self, spark, pca8):
         from brahmand_spark.ops.stats import pca_fit
 
